@@ -16,9 +16,16 @@ Backends:
   (one connection per PLC group, mirroring A3); import-gated because
   the library is absent in this environment.
 
-Partitioning: one input partition per PLC (A3's process-per-PLC), so a
-1000-PLC fleet fans out across executors with per-partition connection
-reuse — the scalable shape of the reference's multiprocessing scheme.
+Partitioning: the batch readers use one input partition per PLC (A3's
+process-per-PLC), so a 1000-PLC fleet fans out across executors with
+per-partition connection reuse — the scalable shape of the reference's
+multiprocessing scheme. The stream reader is a single partition, read
+in the Spark application's main process (a simple stream reader): one
+sweep of every PLC per micro-batch.
+
+Each reader builds its per-PLC tag plan once (tags grouped by PLC,
+``bit_off`` already parsed from the address), so a sweep does no
+address parsing and no scan over other PLCs' tags.
 """
 
 from __future__ import annotations
@@ -88,15 +95,15 @@ class _PlcPartition(InputPartition):
 
 class PLCSimBatchReader(DataSourceReader):
     def __init__(self, options):
-        self.tags = _tags_from_options(options)
+        self.plan = _tag_plan(_tags_from_options(options))
         self.n_polls = int(options.get("polls", "3"))
 
     def partitions(self):
-        ips = sorted({ip for ip, *_ in self.tags})
-        return [_PlcPartition(ip, range(self.n_polls)) for ip in ips]
+        return [_PlcPartition(ip, range(self.n_polls)) for ip in self.plan]
 
     def read(self, partition: _PlcPartition) -> Iterator[tuple]:
-        yield from _poll_rows(self.tags, partition.plc_ip, partition.polls)
+        ip = partition.plc_ip
+        yield from _poll_rows(ip, self.plan[ip], partition.polls)
 
 
 class PLCSimStreamReader(SimpleDataSourceStreamReader):
@@ -104,25 +111,21 @@ class PLCSimStreamReader(SimpleDataSourceStreamReader):
     sweep over every tag of every PLC (the reference's update_items)."""
 
     def __init__(self, options):
-        self.tags = _tags_from_options(options)
+        self.plan = _tag_plan(_tags_from_options(options))
         self.polls_per_batch = int(options.get("pollsPerBatch", "1"))
 
     def initialOffset(self):
         return {"poll": 0}
 
     def read(self, start: dict):
-        first = start["poll"]
-        polls = range(first, first + self.polls_per_batch)
-        rows = []
-        for ip in sorted({ip for ip, *_ in self.tags}):
-            rows.extend(_poll_rows(self.tags, ip, polls))
-        return iter(rows), {"poll": first + self.polls_per_batch}
+        end = start["poll"] + self.polls_per_batch
+        return self.readBetweenOffsets(start, {"poll": end}), {"poll": end}
 
     def readBetweenOffsets(self, start: dict, end: dict):
         polls = range(start["poll"], end["poll"])
         rows = []
-        for ip in sorted({ip for ip, *_ in self.tags}):
-            rows.extend(_poll_rows(self.tags, ip, polls))
+        for ip, tags in self.plan.items():
+            rows.extend(_poll_rows(ip, tags, polls))
         return iter(rows)
 
 
@@ -139,23 +142,35 @@ def _address_numbers(address: str) -> list[int]:
     return [int(x) for x in re.findall(r"[0-9]+", address)]
 
 
-def _poll_rows(tags, plc_ip: str, polls) -> Iterator[tuple]:
+def _bit_offset(data_area: str, address: str):
+    nums = _address_numbers(address)
+    if data_area == "S7AreaDB":
+        return nums[2] if len(nums) > 2 else None
+    return nums[1] if len(nums) > 1 else None
+
+
+def _tag_plan(tags) -> dict[str, list[tuple]]:
+    """PLC ip (sorted) → its tags in config order, each as
+    ``(alias, data_type, data_area, address, bit_off)``."""
+    plan: dict[str, list[tuple]] = {ip: [] for ip in sorted({t[0] for t in tags})}
+    for ip, data_type, data_area, address, alias in tags:
+        plan[ip].append(
+            (alias, data_type, data_area, address, _bit_offset(data_area, address))
+        )
+    return plan
+
+
+def _poll_rows(plc_ip: str, tags, polls) -> Iterator[tuple]:
+    """READING_SCHEMA rows of one PLC's planned ``tags`` for each poll."""
     import datetime
 
     for poll in polls:
         ts = datetime.datetime.utcfromtimestamp(_EPOCH_BASE + poll)
-        for ip, data_type, data_area, address, alias in tags:
-            if ip != plc_ip:
-                continue
-            nums = _address_numbers(address)
-            if data_area == "S7AreaDB":
-                bit_off = nums[2] if len(nums) > 2 else None
-            else:
-                bit_off = nums[1] if len(nums) > 1 else None
+        for alias, data_type, data_area, address, bit_off in tags:
             yield (
                 poll,
                 ts,
-                ip,
+                plc_ip,
                 alias,
                 data_type,
                 data_area,

@@ -532,13 +532,13 @@ def to_csv(resp: dict) -> str:
 def _from_measurement(stmt: str):
     import re
 
-    m = re.search(
-        r'\bFROM\s+("[^"]+"|[\w.]+)', stmt, flags=re.IGNORECASE
-    )
+    m = re.search(r'\bFROM\s+((?:"[^"]+"|[\w.])+)', stmt, flags=re.IGNORECASE)
     if not m:
         return None
-    name = m.group(1).strip('"')
-    return name.split(".")[-1]  # db.rp.name → name
+    # db.rp.name → name; a dot followed by an even number of quotes
+    # is outside double quotes
+    last = re.split(r'\.(?=(?:[^"]*"[^"]*")*[^"]*$)', m.group(1))[-1]
+    return last.strip('"')
 
 
 def serve(api: InfluxAPI, port: int = 0):

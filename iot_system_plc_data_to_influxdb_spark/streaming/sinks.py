@@ -2,11 +2,17 @@
 
 The reference writes one HTTP POST per point to a per-PLC InfluxDB
 database (Linux/InfluxConnector2.py:176,107-109). Here the sink is a
-``foreachBatch`` writer into a parquet table partitioned by
-``plc_ip`` — the db-per-PLC layout as partition directories, with
-whole-micro-batch writes instead of per-point requests (the anti-
-pattern SURVEY.md §4 flags). An InfluxDB-line-protocol writer would
-slot into the same hook where the HTTP client is available.
+``foreachBatch`` writer that appends each micro-batch to one flat
+parquet table: one file per input partition of the batch, which for
+the ``plc_sim`` stream (a single partition) is one file per sweep,
+rows already in (PLC, tag) order. ``plc_ip`` stays a column rather
+than a ``plc_ip=`` directory, so the cost of a batch follows the
+number of points, not the number of PLCs, and files that ``/write``
+appends to the same directory stay visible to reads (Spark skips
+root-level files that sit beside partition directories). Writes are
+whole micro-batches instead of per-point requests (the anti-pattern
+SURVEY.md §4 flags). An InfluxDB-line-protocol writer would slot into
+the same hook where the HTTP client is available.
 
 Per-interval scheduling (A4/A13): the reference runs one thread per
 acquisition-interval group with sleep pacing
@@ -34,13 +40,14 @@ INTERVAL_TRIGGERS = {
 
 
 def write_points_batch(batch_df: DataFrame, batch_id: int, table_path: str) -> None:
-    """foreachBatch hook: idempotent micro-batch append, partitioned by
-    plc_ip (db-per-PLC) — at scale also by date for retention pruning."""
-    (
-        batch_df.withColumn("batch_id", F_lit(batch_id))
-        .write.mode("append")
-        .partitionBy("plc_ip")
-        .parquet(table_path)
+    """foreachBatch hook: at-least-once append of the micro-batch into
+    the flat points table, one parquet file per input partition (one
+    per sweep for ``plc_sim``). A batch replayed after a crash between
+    this write and the checkpoint commit is appended again; its rows
+    carry the same ``batch_id``, which is what lets readers drop the
+    duplicate."""
+    batch_df.withColumn("batch_id", F_lit(batch_id)).write.mode("append").parquet(
+        table_path
     )
 
 
@@ -97,7 +104,20 @@ def start_points_query(
     trigger_interval: str = "0 seconds",
     available_now: bool = False,
 ):
-    """Start one streaming query writing the points table."""
+    """Start one streaming query writing the points table.
+
+    Raises ``ValueError`` when ``table_path`` holds ``plc_ip=``
+    partition directories: flat files appended beside them would be
+    invisible to reads. One local listing, when the stream starts."""
+    if os.path.isdir(table_path):
+        partitioned = [d for d in os.listdir(table_path) if d.startswith("plc_ip=")]
+        if partitioned:
+            raise ValueError(
+                f"{table_path} holds the plc_ip-partitioned layout "
+                f"({partitioned[0]}/ ...); the points sink appends flat files, "
+                "which reads skip beside partition directories. Write to a new "
+                "directory, or rewrite the table without partitionBy('plc_ip')."
+            )
     writer = (
         points.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)

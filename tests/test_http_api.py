@@ -108,6 +108,53 @@ def test_write_then_query_roundtrip(gateway, spark):
     assert vals == [[5]]
 
 
+def test_write_beside_acquisition_table_is_counted(spark, tmp_path):
+    """A point POSTed to /write into the directory the acquisition
+    stream writes must be counted by /query: both append flat files,
+    which reads see together."""
+    import time
+
+    from iot_system_plc_data_to_influxdb_spark.api import IoTEngine
+
+    engine = IoTEngine(spark)
+    table = str(tmp_path / "points")
+    q = engine.start_acquisition(table, str(tmp_path / "ckpt"))
+    deadline = time.time() + 60
+    while time.time() < deadline and (q.lastProgress or {}).get("batchId", -1) < 2:
+        time.sleep(0.2)
+    q.stop()
+    server, port = engine.serve_influx_api(table)
+    try:
+        base = f"http://127.0.0.1:{port}"
+        req = urllib.request.Request(
+            f"{base}/write?db=iot",
+            data=b"plc_written rpm=7 1704067200000000000",
+            method="POST",
+        )
+        with urllib.request.urlopen(req, timeout=60) as r:
+            assert r.status == 204
+        q = urllib.parse.quote(
+            "SELECT count(value) FROM points WHERE \"plc_ip\" = 'plc_written'"
+        )
+        _status, body = _get(f"{base}/query?q={q}")
+        assert json.loads(body)["results"][0]["series"][0]["values"] == [[1]]
+    finally:
+        server.shutdown()
+
+
+@pytest.mark.parametrize(
+    "source, name",
+    [('"10.0.0.1"', "10.0.0.1"), ('mydb.autogen."10.0.3.12"', "10.0.3.12")],
+)
+def test_quoted_measurement_keeps_dots(gateway, source, name):
+    """Dots inside a quoted measurement name are part of the name; only
+    dots outside quotes separate db.rp.measurement."""
+    base, _ = gateway
+    q = urllib.parse.quote(f"SELECT count(value) FROM {source}")
+    _status, body = _get(f"{base}/query?q={q}")
+    assert json.loads(body)["results"][0]["series"][0]["name"] == name
+
+
 def test_multi_statement_error_isolation(gateway):
     """InfluxDB accepts q=stmt1;stmt2 (dashboards batch their panel
     queries) and returns one result object per statement; a malformed

@@ -42,6 +42,27 @@ def test_plc_source_batch_read(spark):
     assert by_key[("192.168.0.12", "uptime_s", 0)] == float(2147483000 + seed_u * 1000)
 
 
+def test_stream_reader_sweep_order_and_bit_offsets():
+    """One micro-batch read: PLCs in sorted order, each PLC's polls in
+    turn, tags in config order; bit_off parsed from Bit addresses."""
+    reader = plc_src.PLCSimStreamReader({"pollsPerBatch": "2"})
+    rows, end = reader.read({"poll": 4})
+    rows = list(rows)
+    assert end == {"poll": 6}
+    expected = [
+        (poll, ip, alias)
+        for ip in ("192.168.0.10", "192.168.0.11", "192.168.0.12")
+        for poll in (4, 5)
+        for tag_ip, _dt, _area, _addr, alias in plc_src.DEFAULT_TAGS
+        if tag_ip == ip
+    ]
+    assert [(r[0], r[2], r[3]) for r in rows] == expected
+    bit_offs = {"door_open": 1, "alarm": 7}  # I0.1, DB5.DBX2.7
+    assert all(r[7] == bit_offs.get(r[3]) for r in rows)
+    assert all(r[8] == plc_src.simulate_buffer(r[4], r[3], r[0]) for r in rows)
+    assert list(reader.readBetweenOffsets({"poll": 4}, end)) == rows
+
+
 def test_plc_source_stream_microbatches(spark):
     plc_src.register(spark)
     raw = spark.readStream.format("plc_sim").option("pollsPerBatch", "2").load()
@@ -198,33 +219,65 @@ def test_session_window_stream(spark):
 
 
 def test_interval_orchestration_and_sink(spark):
-    """A4/A12/A13: per-interval queries write partitioned points tables."""
+    """A4/A12/A13: the points sink appends one flat parquet file per
+    micro-batch, with plc_ip a column rather than a directory."""
     from iot_system_plc_data_to_influxdb_spark.streaming.sinks import (
         start_points_query,
     )
 
     plc_src.register(spark)
     with tempfile.TemporaryDirectory() as tmp:
+        table, ckpt = os.path.join(tmp, "points"), os.path.join(tmp, "ckpt")
         raw = spark.readStream.format("plc_sim").option("pollsPerBatch", "3").load()
         points = decode_readings(raw)
-        q = start_points_query(
-            points,
-            os.path.join(tmp, "points"),
-            os.path.join(tmp, "ckpt"),
-            trigger_interval="0 seconds",
-        )
+        q = start_points_query(points, table, ckpt, trigger_interval="0 seconds")
         deadline = time.time() + 60
         while time.time() < deadline and q.lastProgress is None:
             time.sleep(0.5)
         time.sleep(2)
         q.stop()
-        written = spark.read.parquet(os.path.join(tmp, "points"))
+        written = spark.read.parquet(table)
         assert written.count() > 0
-        # db-per-PLC layout: one partition dir per plc_ip (A12)
-        parts = [
-            d for d in os.listdir(os.path.join(tmp, "points")) if d.startswith("plc_ip=")
-        ]
-        assert len(parts) == 3
+        assert not [d for d in os.listdir(table) if d.startswith("plc_ip=")]
+        # exactly one data file per committed batch; a batch the stop
+        # interrupted after its write but before its commit may add one
+        commits = {int(n) for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit()}
+        data_files = [f for f in os.listdir(table) if f.endswith(".parquet")]
+        file_batches = (
+            written.select("batch_id", F.input_file_name().alias("file"))
+            .distinct()
+            .collect()
+        )
+        assert len(file_batches) == len(data_files)  # one batch per file
+        per_batch = {}
+        for r in file_batches:
+            per_batch[r["batch_id"]] = per_batch.get(r["batch_id"], 0) + 1
+        assert commits and all(per_batch.get(b) == 1 for b in commits)
+        assert set(per_batch) - commits <= {max(commits) + 1}
+        # all three PLCs land in the one file as plc_ip values
+        assert {r["plc_ip"] for r in written.select("plc_ip").distinct().collect()} == {
+            "192.168.0.10",
+            "192.168.0.11",
+            "192.168.0.12",
+        }
+
+
+def test_points_query_refuses_plc_partitioned_table(spark, tmp_path):
+    """Flat files appended beside plc_ip= directories would be skipped
+    by reads, so the sink refuses a table in the partitioned layout."""
+    import pytest
+
+    from iot_system_plc_data_to_influxdb_spark.streaming.sinks import (
+        start_points_query,
+    )
+
+    plc_src.register(spark)
+    table = tmp_path / "points"
+    (table / "plc_ip=192.168.0.10").mkdir(parents=True)
+    points = decode_readings(spark.readStream.format("plc_sim").load())
+    with pytest.raises(ValueError, match="plc_ip"):
+        start_points_query(points, str(table), str(tmp_path / "ckpt"))
+    assert not (tmp_path / "ckpt").exists()
 
 
 def test_current_value_batch_matches_stream_semantics(spark):
